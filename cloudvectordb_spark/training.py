@@ -167,10 +167,16 @@ def train_encoder_spark(
     2 x |W| per shard (~256 KB here), independent of data size, and each
     round is an embarrassingly parallel stage: the 100 TB shape.
 
-    Deterministic given (seed, shard contents): seeded init, shards
-    sorted by anchor_id before the batch step, reduce over sorted
-    shard_ids. Artifact format matches ``train_encoder_stub``, so
-    ``embed_with_artifact`` consumes it unchanged.
+    Deterministic given (seed, shard contents, BLAS kernel): seeded
+    init, shards sorted by anchor_id before the batch step, reduce over
+    sorted shard_ids. Bit-determinism holds per BLAS kernel, not across
+    kernels: OpenBLAS picks its float32 GEMM kernel for the CPU, and
+    each kernel rounds differently, so the same inputs give different
+    weight bytes on, say, a Haswell and a Cooperlake kernel. The
+    committed golden is therefore keyed on the fixture sha plus a pinned
+    kernel (``tools/make_golden.py``). Artifact format matches
+    ``train_encoder_stub``, so ``embed_with_artifact`` consumes it
+    unchanged.
     """
     import pandas as pd
 

@@ -222,20 +222,38 @@ def test_trained_e2e_index_recall_beats_stub(spark, sf_dir, tmp_path):
     )
 
 
-def test_trained_artifact_matches_committed_golden(spark):
+def test_trained_artifact_matches_committed_golden():
     """Round-4 verdict item 5: a regression in the trainer must break
     pytest, not just downstream recall. The committed golden
     (tests/golden/trained_artifact.json, regenerate via
     tools/make_golden.py after INTENTIONAL trainer changes) pins the
-    artifact's proj bytes AND the embedded output at sf0.001. Keyed on
-    the fixture's sha256 — if the driver regenerated testdata the test
-    SKIPS loudly instead of failing on data drift."""
+    artifact's proj bytes AND the embedded output at sf0.001.
+
+    The trainer is bit-deterministic per BLAS kernel, not across
+    kernels, so the golden is keyed on the fixture's sha256 PLUS the
+    pinned OpenBLAS kernel (make_golden.GOLDEN_CORETYPE). The check runs
+    in a child process under make_golden.pinned_env: the kernel pin
+    (inherited by the JVM and its Python workers) and a fresh TMPDIR, so
+    the artifact is trained anew under that kernel rather than reused
+    from this session's cache. The child's OpenBLAS must report the
+    pinned kernel, so a silently ignored pin fails loudly. If the
+    testdata was regenerated the test SKIPS loudly instead of failing on
+    data drift; it also skips where numpy's BLAS cannot be pinned (not
+    OpenBLAS with DYNAMIC_ARCH on x86-64)."""
     import json
     import os
 
     import pytest as _pytest
 
-    from tools.make_golden import OUT, SF_DIR, compute, file_sha
+    from tools.make_golden import (
+        GOLDEN_CORETYPE,
+        OUT,
+        SF_DIR,
+        compute_pinned,
+        file_sha,
+        pin_unavailable_reason,
+        reported_cores,
+    )
 
     if not os.path.exists(OUT):
         _pytest.skip("no committed golden (run tools/make_golden.py)")
@@ -247,7 +265,14 @@ def test_trained_artifact_matches_committed_golden(spark):
             "fixture regenerated since golden was committed — rerun "
             "tools/make_golden.py to re-pin"
         )
-    live = compute(spark)
+    reason = pin_unavailable_reason()
+    if reason:
+        _pytest.skip(f"golden is keyed on an OpenBLAS kernel pin: {reason}")
+    live, log = compute_pinned()
+    cores = reported_cores(log)
+    assert cores == {GOLDEN_CORETYPE}, (
+        f"OpenBLAS kernel pin not honoured: child reported cores {cores}"
+    )
     assert live["proj_sha"] == golden["proj_sha"], "trainer weights drifted"
     assert live["proj_shape"] == golden["proj_shape"]
     assert live["emb_sha"] == golden["emb_sha"], "embedded output drifted"
